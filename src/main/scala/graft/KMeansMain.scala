@@ -24,7 +24,8 @@ import graft.sources.PointsSource
   *     override the reference lacks (which is why its own recorded
   *     runs are unreproducible);
   *   - integer-mean iteration arithmetic
-  *     (kmeans_mapreduce_core.cu:54-69 via `KMeansDF.stepInt`);
+  *     (kmeans_mapreduce_core.cu:54-69: `KMeansDF.fitReferenceFrom`,
+  *     with `KMeansDF.stepInt`'s arithmetic);
   *   - the same output: one `Point: (x,y)` line per centroid to
   *     stdout AND to `<input>.output`
   *     (kmeans_with_mapreduce-cuda.cu:105-121), then the three
@@ -39,17 +40,31 @@ object KMeansMain {
     * its output loop. Returns the `Point: (x,y)` lines in centroid
     * slot order. Exposed separately so the spec can drive it without
     * process-level side effects. */
-  def run(spark: SparkSession, fname: String, seed: Long): Seq[String] = {
+  def run(spark: SparkSession, fname: String, seed: Long): Seq[String] =
+    timedRun(spark, fname, seed)
+      .getOrElse(throw new IllegalArgumentException(s"no points parsed from $fname"))._1
+
+  /** [[run]] plus the reference's two stopwatches in ms, read_data +
+    * initialize_centroids and the Lloyd loop (cu:36, 76-80); None when
+    * the file yields no points. */
+  private def timedRun(spark: SparkSession, fname: String,
+      seed: Long): Option[(Seq[String], Long, Long)] = {
+    val t0 = System.nanoTime()
     val points = PointsSource.readPoints(spark, fname)
       .orderBy("id").limit(NumInput).cache()
-    val n = points.count().toInt
-    require(n > 0, s"no points parsed from $fname")
-    val init = ReferenceRng.seededInit(points, NumOutput, math.min(NumInput, n), seed)
-    val cs = KMeansDF.fitReferenceFrom(points, init, Iterations)
-    points.unpersist(blocking = false)
-    // Point is integer-coordinate (config.cuh:17-19); integer means keep
-    // it so — print as the reference's operator<< does
-    cs.map(c => s"Point: (${c.x.toLong},${c.y.toLong})")
+    try {
+      val n = points.count().toInt
+      if (n == 0) None
+      else {
+        val init = ReferenceRng.seededInit(points, NumOutput, math.min(NumInput, n), seed)
+        val t1 = System.nanoTime()
+        val cs = KMeansDF.fitReferenceFrom(points, init, Iterations)
+        // Point is integer-coordinate (config.cuh:17-19); integer means
+        // keep it so — print as the reference's operator<< does
+        val lines = cs.map(c => s"Point: (${c.x.toLong},${c.y.toLong})")
+        Some((lines, (t1 - t0) / 1000000, (System.nanoTime() - t1) / 1000000))
+      }
+    } finally points.unpersist(blocking = false)
   }
 
   def main(args: Array[String]): Unit = {
@@ -70,28 +85,16 @@ object KMeansMain {
     val seed = sys.env.get("SPARK_GRAFT_SEED")
       .orElse(sys.props.get("spark.graft.seed")).map(_.toLong)
       .getOrElse(System.currentTimeMillis())
-    val t0 = System.nanoTime()
-    // load/init vs compute timing split mirrors the reference's
-    // read_data / runTask stopwatches (cu:36, 76-80)
-    val points = PointsSource.readPoints(spark, fname)
-      .orderBy("id").limit(NumInput).cache()
-    val n = points.count().toInt
-    if (n == 0) {
+    val (lines, loadMs, fitMs) = timedRun(spark, fname, seed).getOrElse {
       println("Failed to read file.")
       sys.exit(1)
     }
-    val init = ReferenceRng.seededInit(points, NumOutput, math.min(NumInput, n), seed)
-    val t1 = System.nanoTime()
-    val cs = KMeansDF.fitReferenceFrom(points, init, Iterations)
-    val lines = cs.map(c => s"Point: (${c.x.toLong},${c.y.toLong})")
     lines.foreach(println)
-    val outPath = java.nio.file.Paths.get(fname + ".output")
-    java.nio.file.Files.write(outPath,
+    java.nio.file.Files.write(java.nio.file.Paths.get(fname + ".output"),
       lines.mkString("", "\n", "\n").getBytes("UTF-8"))
-    val t2 = System.nanoTime()
-    println(s"Data loading and initialize: ${(t1 - t0) / 1000000} milliseconds")
-    println(s"Time for map reduce KMeans: ${(t2 - t1) / 1000000} milliseconds")
-    println(s"Total time: ${(t2 - t0) / 1000000} milliseconds")
+    println(s"Data loading and initialize: $loadMs milliseconds")
+    println(s"Time for map reduce KMeans: $fitMs milliseconds")
+    println(s"Total time: ${loadMs + fitMs} milliseconds")
     // the spec drives main() inside the shared test JVM, where the
     // session must outlive this call
     if (!sys.props.contains("spark.graft.test.keepSession")) spark.stop()

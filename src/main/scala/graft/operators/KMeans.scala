@@ -1,7 +1,9 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Spark-first re-expression of the reference's GPU MapReduce K-means
   * (kmeans_mapreduce_core.cu, kmeans_with_mapreduce-cuda.cu).
@@ -16,7 +18,10 @@ import org.apache.spark.sql.functions._
   *     partition cross the wire; this is exactly the skew-proof "loading
   *     balance" the reference hand-rolls, for free.
   *   - iterate (kmeans_mapreduce_core.cu:237-259): driver loop over k×dim
-  *     doubles (tiny state), re-broadcast each round.
+  *     doubles (tiny state), re-broadcast each round. Both fits run their
+  *     rounds on one treeAggregate round over a pinned coordinate RDD
+  *     ([[stepRdd]]); the declarative [[step]] and [[stepInt]] are the
+  *     references it is tested against.
   *
   * At 100 TB: the point table is only ever scanned (never repartitioned);
   * each iteration moves k×numPartitions partial-agg rows, independent of
@@ -66,45 +71,63 @@ object KMeansDF {
       Centroid(i, r.getAs[Double]("x"), r.getAs[Double]("y"))
     }
 
-  /** One Lloyd iteration over a pinned coordinate RDD: broadcast
-    * centroids, treeAggregate of k×(Σx, Σy, n) partials. Same
-    * arithmetic and lowest-cid tie-break as [[step]], but the inner
-    * loop carries no Catalyst work — a fresh DataFrame plan would be
-    * re-analyzed and re-optimized every round because the centroid
-    * literals change. This is the one place imperative RDD code beats
-    * the declarative plan (and is exactly MLlib's own shape). */
-  private def stepRdd(rdd: org.apache.spark.rdd.RDD[(Double, Double)],
-      centroids: Seq[Centroid], roundTo: Int = 6): Seq[Centroid] = {
+  /** The (x, y) columns as an RDD pinned (MEMORY_AND_DISK) for a fit:
+    * iterative refinement re-scans the points every round. The fit
+    * unpersists it; the caller's frame is never persisted or dropped. */
+  private def pinXY(points: DataFrame): RDD[(Double, Double)] =
+    points.select(col("x"), col("y"))
+      .rdd.map(r => (r.getDouble(0), r.getDouble(1)))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** One Lloyd round over a pinned coordinate RDD, shared by both 2-D
+    * fits: broadcast centroids, the argmin of [[nearest]] (strict <, so
+    * the lowest cid wins ties; a point with no finite distance joins no
+    * cluster), and a treeAggregate of per-cluster sums, so only k rows
+    * per partition reach the driver. The loop carries no Catalyst work
+    * — a fresh DataFrame plan would be re-analyzed and re-optimized
+    * every round because the centroid literals change — which is
+    * MLlib's own shape. The fit picks the mean rule, applied on the
+    * driver to k rows: [[step]]'s Σ/n HALF_UP-rounded to 6 decimals, or,
+    * when `integer`, [[stepInt]]'s Σ trunc(coord) divided by n with
+    * truncating integer division. Empty clusters keep their centroid. */
+  private def stepRdd(rdd: RDD[(Double, Double)], centroids: Seq[Centroid],
+      integer: Boolean): Seq[Centroid] = {
     val sorted = centroids.sortBy(_.cid)
     val cxs = sorted.map(_.x).toArray
     val cys = sorted.map(_.y).toArray
     val k = cxs.length
     val bc = rdd.sparkContext.broadcast((cxs, cys))
     try {
-      val (sx, sy, cnt) = rdd.treeAggregate(
-        (new Array[Double](k), new Array[Double](k), new Array[Long](k)))(
-        seqOp = { case (acc, (x, y)) =>
+      // cluster i's x sums sit at 2i and its y sums at 2i+1: as doubles
+      // for the HALF_UP rule and truncated to longs for the integer rule
+      val (sumD, sumL, size) = rdd.treeAggregate(
+        (new Array[Double](2 * k), new Array[Long](2 * k), new Array[Long](k)))(
+        seqOp = { case (acc @ (ds, ls, cnt), (x, y)) =>
           val (cx, cy) = bc.value
-          var best = Double.MaxValue; var bi = 0; var i = 0
+          var best = Double.MaxValue; var bi = -1; var i = 0
           while (i < k) {
             val dx = x - cx(i); val dy = y - cy(i)
             val d = dx * dx + dy * dy
-            if (d < best) { best = d; bi = i } // strict < → lowest cid wins ties
+            if (d < best) { best = d; bi = i }
             i += 1
           }
-          acc._1(bi) += x; acc._2(bi) += y; acc._3(bi) += 1
+          if (bi >= 0) {
+            ds(2 * bi) += x; ds(2 * bi + 1) += y
+            ls(2 * bi) += x.toLong; ls(2 * bi + 1) += y.toLong
+            cnt(bi) += 1
+          }
           acc
         },
-        combOp = { case (a, b) =>
-          var i = 0
-          while (i < k) { a._1(i) += b._1(i); a._2(i) += b._2(i); a._3(i) += b._3(i); i += 1 }
+        combOp = { case (a @ (ds, ls, cnt), (ds2, ls2, cnt2)) =>
+          for (i <- 0 until 2 * k) { ds(i) += ds2(i); ls(i) += ls2(i) }
+          for (i <- 0 until k) cnt(i) += cnt2(i)
           a
         })
-      def rnd(v: Double): Double =
-        BigDecimal(v).setScale(roundTo, BigDecimal.RoundingMode.HALF_UP).toDouble
+      def mean(s: Int, n: Long): Double =
+        if (integer) (sumL(s) / n).toDouble
+        else BigDecimal(sumD(s) / n).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       sorted.zipWithIndex.map { case (c, i) =>
-        if (cnt(i) == 0) c // empty cluster unchanged, as in the reference
-        else Centroid(c.cid, rnd(sx(i) / cnt(i)), rnd(sy(i) / cnt(i)))
+        if (size(i) == 0) c else Centroid(c.cid, mean(2 * i, size(i)), mean(2 * i + 1, size(i)))
       }
     } finally bc.destroy()
   }
@@ -121,24 +144,18 @@ object KMeansDF {
     * assign+update stages (km_lloyd's hash gate, round 11). */
   def fitWithIters(points: DataFrame, k: Int, maxIter: Int = 25,
       tol: Double = 1e-4): (Seq[Centroid], Int) = {
-    // iterative refinement re-scans the points every round: pin the
-    // two coordinate columns (MEMORY_AND_DISK) for the duration
-    val rdd = points.select(col("x"), col("y"))
-      .rdd.map(r => (r.getDouble(0), r.getDouble(1)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val rdd = pinXY(points)
     try {
       var cs = initFirstK(points, k)
       var iter = 0
       var moved = Double.MaxValue
       while (iter < maxIter && moved >= tol) {
-        val next = stepRdd(rdd, cs)
+        val next = stepRdd(rdd, cs, integer = false)
         moved = cs.zip(next).map { case (a, b) =>
           math.max(math.abs(a.x - b.x), math.abs(a.y - b.y))
         }.max
         cs = next
         iter += 1
-        if (sys.env.contains("SPARK_GRAFT_KM_DEBUG"))
-          System.err.println(s"[km] iter $iter moved=$moved t=${System.nanoTime() / 1e9}")
       }
       (cs, iter)
     } finally rdd.unpersist(blocking = false)
@@ -150,12 +167,15 @@ object KMeansDF {
 
   // ---- reference-faithful integer mode ------------------------------
 
-  /** One iteration with the reference's exact arithmetic: integer
-    * coordinates, per-cluster integer sums, truncating-division means
-    * (kmeans_mapreduce_core.cu:54-69 `new_centroid.x /= len`). Distance
-    * comparison in double is exact here — Birch coords ≤ ~1e6, so
-    * squared distances stay below 2^53. Empty clusters keep their
-    * centroid, as in the reference (no pairs → untouched). */
+  /** One iteration with the reference's exact arithmetic
+    * (kmeans_mapreduce_core.cu:54-69 `new_centroid.x /= len`), as a
+    * declarative plan: distances on the parsed doubles, per-cluster
+    * sums of coordinates truncated to integers, truncating-division
+    * means. Distance comparison in double is exact for Birch coords
+    * ≤ ~1e6 (squared distances stay below 2^53). Empty clusters keep
+    * their centroid, as in the reference (no pairs → untouched). Tests
+    * check [[fitReferenceFrom]]'s rounds against it; callers that drive
+    * their own loop use it per round (it plans a new query each call). */
   def stepInt(points: DataFrame, centroids: Seq[Centroid]): Seq[Centroid] = {
     val moved = assign(points, centroids)
       .groupBy("cid")
@@ -168,31 +188,21 @@ object KMeansDF {
     centroids.map(c => moved.getOrElse(c.cid, c)).sortBy(_.cid)
   }
 
-  /** The reference's full pipeline shape: fixed iteration count
-    * (config.cuh ITERATIONS), integer means, deterministic init. */
-  def fitReference(points: DataFrame, k: Int, iterations: Int): Seq[Centroid] = {
-    val pinned = points.persist()
-    try {
-      var cs = initFirstK(pinned, k)
-      var i = 0
-      while (i < iterations) { cs = stepInt(pinned, cs); i += 1 }
-      cs
-    } finally pinned.unpersist(blocking = false)
-  }
-
-  /** [[fitReference]] from an EXPLICIT init (the CLI's seeded draw,
-    * kmeans_with_mapreduce-cuda.cu:75), with a cycle early-exit:
-    * `stepInt` is deterministic, so the trajectory is eventually
-    * periodic — usually a fixpoint, occasionally a short limit cycle
-    * (integer means can oscillate between two partitions). On
-    * revisiting a state the remaining rounds are resolved by
+  /** The reference's integer Lloyd (config.cuh ITERATIONS rounds of
+    * [[stepInt]]'s arithmetic) from an explicit init, such as the CLI's
+    * seeded draw (kmeans_with_mapreduce-cuda.cu:75) or [[initFirstK]].
+    * Rounds run on [[stepRdd]] over the fit's own pinned coordinate
+    * RDD. The integer round is deterministic, so the trajectory is
+    * eventually periodic — usually a fixpoint, occasionally a short
+    * limit cycle (integer means can oscillate between two partitions).
+    * On revisiting a state the remaining rounds are resolved by
     * arithmetic ((iterations − i) mod period extra steps), so the
-    * result is IDENTICAL to running the reference's full fixed count,
-    * at a fraction of the rounds. State history is ≤ iterations × k
-    * tiny case classes — driver-trivial. */
+    * result is IDENTICAL to running the full fixed count, at a fraction
+    * of the rounds. State history is ≤ iterations × k tiny case
+    * classes — driver-trivial. */
   def fitReferenceFrom(points: DataFrame, init: Seq[Centroid],
       iterations: Int): Seq[Centroid] = {
-    val pinned = points.persist()
+    val rdd = pinXY(points)
     try {
       val seen = scala.collection.mutable.HashMap[Seq[Centroid], Int]()
       var cs = init.sortBy(_.cid)
@@ -203,15 +213,15 @@ object KMeansDF {
           case Some(j) => // entered a cycle of period i-j at round j
             val rem = (iterations - i) % (i - j)
             var r = 0
-            while (r < rem) { cs = stepInt(pinned, cs); r += 1 }
+            while (r < rem) { cs = stepRdd(rdd, cs, integer = true); r += 1 }
             done = true
           case None =>
             seen(cs) = i
-            cs = stepInt(pinned, cs)
+            cs = stepRdd(rdd, cs, integer = true)
             i += 1
         }
       }
       cs
-    } finally pinned.unpersist(blocking = false)
+    } finally rdd.unpersist(blocking = false)
   }
 }

@@ -122,4 +122,32 @@ class KMeansMainSpec extends SparkSpec {
     assert(a !== c, "different seeds draw different inits")
     assert(a.forall(_.matches("""Point: \(\d+,\d+\)""")))
   }
+
+  test("KMeansMain.main emits the reference's output contract on a generated file") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_cli_")
+    try {
+      val input = BlobPoints.write(BlobPoints.generate(21L, 3000), dir.resolve("blobs.txt")).toString
+      val viaRun = KMeansMain.run(spark, input, seed = 2021L)
+      System.setProperty("spark.graft.seed", "2021")
+      System.setProperty("spark.graft.test.keepSession", "1")
+      val out = new java.io.ByteArrayOutputStream()
+      try Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
+        KMeansMain.main(Array(input))
+      } finally {
+        System.clearProperty("spark.graft.seed")
+        System.clearProperty("spark.graft.test.keepSession")
+      }
+      val stdout = out.toString("UTF-8").linesIterator.toSeq
+      val (printed, timing) = stdout.splitAt(KMeansMain.NumOutput)
+      assert(printed.forall(_.matches("""Point: \(-?\d+,-?\d+\)""")), stdout.mkString("\n"))
+      assert(timing.length === 3 &&
+        timing(0).matches("Data loading and initialize: \\d+ milliseconds") &&
+        timing(1).matches("Time for map reduce KMeans: \\d+ milliseconds") &&
+        timing(2).matches("Total time: \\d+ milliseconds"), stdout.mkString("\n"))
+      val saved = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(input + ".output")), "UTF-8").linesIterator.toSeq
+      assert(saved === printed, "file output must equal stdout centroids")
+      assert(printed === viaRun, "main and run must fit the same centroids")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
 }

@@ -1,8 +1,11 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.KMeansDF
+import org.apache.spark.storage.StorageLevel
+import graft.operators.{KMeansDF, ReferenceRng}
 import graft.operators.KMeansDF.Centroid
+import graft.sources.PointsSource
 
 class KMeansSpec extends SparkSpec {
   private val s = TestSession.spark
@@ -219,5 +222,85 @@ class KMeansSpec extends SparkSpec {
     val blobKept = sel.keys.count(_ < 5000L)
     assert(blobKept > 60 && blobKept < 230,
       s"blob kept $blobKept of 1000 — expected ~128")
+  }
+
+  test("a point with no finite distance joins no cluster in the fit, as in step") {
+    val p = tiny.union(Seq((4L, Double.NaN, Double.NaN)).toDF("id", "x", "y"))
+    val cs = KMeansDF.initFirstK(p, 2)
+    assert(KMeansDF.fit(p, 2, maxIter = 1, tol = 0.0) === KMeansDF.step(p, cs))
+  }
+
+  // ---- the reference-parity integer fit ------------------------------
+
+  /** Blob points written to a temp `x y` file and read back as the CLI
+    * reads them; `body` gets the frame and the generated coordinates
+    * in file order. */
+  private def withBlobs[T](seed: Long, fractional: Boolean = false)(
+      body: (DataFrame, IndexedSeq[(Double, Double)]) => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_blobs_")
+    val ps = BlobPoints.generate(seed, 2000, fractional)
+    val points = PointsSource.readPoints(spark,
+      BlobPoints.write(ps, dir.resolve("blobs.txt")).toString).orderBy("id").cache()
+    try {
+      assert(points.count() === ps.length)
+      body(points, ps)
+    } finally {
+      points.unpersist(blocking = true)
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
+
+  private def stepIntChain(p: DataFrame, init: Seq[Centroid], n: Int) =
+    Iterator.iterate(init)(KMeansDF.stepInt(p, _)).drop(n).next()
+
+  test("fitReferenceFrom keeps the caller's cached frame cached") {
+    val p = tiny.cache()
+    try {
+      p.count()
+      KMeansDF.fitReferenceFrom(p, KMeansDF.initFirstK(p, 2), 3)
+      assert(p.storageLevel !== StorageLevel.NONE, "the caller's cache entry was dropped")
+    } finally p.unpersist(blocking = true)
+  }
+
+  test("fitReferenceFrom's N rounds equal an N-step stepInt chain from the seeded init") {
+    withBlobs(11L) { (p, ps) =>
+      val init = ReferenceRng.seededInit(p, KMeansMain.NumOutput, ps.length, seed = 5L)
+      for (n <- Seq(1, 4))
+        assert(KMeansDF.fitReferenceFrom(p, init, n) === stepIntChain(p, init, n), s"$n rounds")
+    }
+  }
+
+  test("fitReferenceFrom over the CLI's 999 rounds equals a plain integer Lloyd run in full") {
+    withBlobs(12L) { (p, ps) =>
+      for (seed <- Seq(1L, 2021L)) {
+        val init = ReferenceRng.seededInit(p, KMeansMain.NumOutput, ps.length, seed)
+        assert(KMeansDF.fitReferenceFrom(p, init, KMeansMain.Iterations) ===
+          BlobPoints.lloydInt(ps, init, KMeansMain.Iterations), s"seed $seed")
+      }
+    }
+  }
+
+  test("fitReferenceFrom on non-integer, negative coordinates equals the stepInt chain") {
+    withBlobs(13L, fractional = true) { (p, ps) =>
+      assert(ps.exists { case (x, _) => x < 0 && x != math.rint(x) })
+      val init = ReferenceRng.seededInit(p, KMeansMain.NumOutput, ps.length, seed = 9L)
+      assert(KMeansDF.fitReferenceFrom(p, init, 4) === stepIntChain(p, init, 4))
+      assert(KMeansDF.fitReferenceFrom(p, init, KMeansMain.Iterations) ===
+        BlobPoints.lloydInt(ps, init, KMeansMain.Iterations))
+    }
+  }
+
+  test("a duplicated init draw leaves its empty cluster unchanged") {
+    withBlobs(14L) { (p, ps) =>
+      // 15 draws over 10 file positions must repeat some
+      val init = ReferenceRng.seededInit(p, KMeansMain.NumOutput, 10, seed = 3L)
+      val dups = init.filter(c => init.exists(o => o.cid < c.cid && o.x == c.x && o.y == c.y))
+      assert(dups.nonEmpty)
+      val next = KMeansDF.fitReferenceFrom(p, init, 1)
+      dups.foreach(c => assert(next(c.cid) === c, s"slot ${c.cid} has no members"))
+      assert(next === KMeansDF.stepInt(p, init))
+      assert(KMeansDF.fitReferenceFrom(p, init, KMeansMain.Iterations) ===
+        BlobPoints.lloydInt(ps, init, KMeansMain.Iterations))
+    }
   }
 }

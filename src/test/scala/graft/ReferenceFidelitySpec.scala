@@ -54,7 +54,7 @@ class ReferenceFidelitySpec extends SparkSpec {
   }
 
   test("integer-mode Lloyd's matches the reference's arithmetic") {
-    val cs = KMeansDF.fitReference(points, K, iterations = 10)
+    val cs = KMeansDF.fitReferenceFrom(points, KMeansDF.initFirstK(points, K), 10)
     assert(cs.length === K)
     // integer means: every centroid coordinate is a whole number in range
     assert(cs.forall(c => c.x == math.floor(c.x) && c.y == math.floor(c.y)))
